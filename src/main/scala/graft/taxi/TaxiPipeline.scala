@@ -4,7 +4,7 @@ import graft.etl.Anomalies
 import graft.queries.Funcs
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.ShortType
+import org.apache.spark.sql.types.{LongType, ShortType}
 
 /** The reference pipeline end-to-end, reference-exact semantics, over the
   * taxi-trip schema (`SELECTED_COLUMNS`, reference
@@ -23,15 +23,22 @@ object TaxiPipeline {
     "fare_amount", "total_amount")
 
   /** Extract stage (reference `extract.py:21-66`): projection → datetime
-    * coercion (null on bad input, tz naive via UTC session) → drop null
-    * dates → null-fill + int16 narrowing. The category cast
-    * (`extract.py:53`) is a no-op in Spark (parquet dictionary-encodes). */
+    * coercion (null on bad input, in ANSI mode too; tz naive via UTC
+    * session) → drop null dates → null-fill + int16 narrowing. The category
+    * cast (`extract.py:53`) is a no-op in Spark (parquet dictionary-encodes).
+    * A pandas-written `timestamp[ns]` column reads as epoch-nanosecond
+    * LongType under `spark.sql.legacy.parquet.nanosAsLong`; it converts
+    * through micros as `Tables` does, since `to_timestamp(long)` would read
+    * the nanos as seconds and saturate. */
   def extract(raw: DataFrame): DataFrame = {
     val dateCols = Seq("tpep_pickup_datetime", "tpep_dropoff_datetime")
     val narrowed = Seq("VendorID", "passenger_count", "PULocationID", "DOLocationID")
     val projected = raw.select(selectedColumns.map(col): _*)
     val coerced = dateCols.foldLeft(projected)((df, c) =>
-      df.withColumn(c, to_timestamp(col(c))))
+      df.withColumn(c, df.schema(c).dataType match {
+        case LongType => timestamp_micros(expr(s"$c div 1000"))
+        case _ => try_to_timestamp(col(c))
+      }))
     val cleaned = coerced.na.drop(dateCols)
     val ints = narrowed.foldLeft(cleaned)((df, c) =>
       df.withColumn(c, coalesce(col(c), lit(0)).cast(ShortType)))
@@ -44,13 +51,14 @@ object TaxiPipeline {
   /** Derived metrics (reference `transform.py:33-41`): duration in minutes
     * from timestamp subtraction, speed = distance/hours rounded to 2 (the
     * reference rounds BEFORE the range rule — preserved). ÷0 diverges:
-    * pandas yields Infinity, Spark non-ANSI double division yields NULL —
+    * pandas yields Infinity, `try_divide` yields NULL (in ANSI mode too) —
     * both are tagged anomalous by the (null-aware) speed rule below, and
     * the duration<=0 rule fires first anyway, so the split matches. */
   def calculateMetrics(df: DataFrame): DataFrame =
     df.withColumn("trip_duration",
         (col("tpep_dropoff_datetime").cast("long") - col("tpep_pickup_datetime").cast("long")) / 60.0)
-      .withColumn("avg_speed", round(col("trip_distance") / (col("trip_duration") / 60.0), 2))
+      .withColumn("avg_speed",
+        round(try_divide(col("trip_distance"), col("trip_duration") / 60.0), 2))
 
   /** The five prioritized rules, exact labels and bounds
     * (reference `transform.py:47-53`; pandas `between` is inclusive).
@@ -88,16 +96,21 @@ object TaxiPipeline {
     "4" -> "Aéroport LaGuardia", "5" -> "Course partagée", "6" -> "Location")
 
   /** Categorical encoding (reference `transform.py:92-111`): dict-map with
-    * null on unmatched keys. */
+    * null on unmatched keys. Codes compare by value, as pandas `.map({1: …})`
+    * does: the string keys coerce to a numeric code's type, so the double
+    * `RatecodeID` of TLC files matches 1.0 (1.5, 99 and NULL stay NULL),
+    * where a cast to string would compare "1.0" with "1". */
   def encodeFeatures(df: DataFrame): DataFrame =
-    df.withColumn("payment_label",
-        Funcs.labelMap(col("payment_type").cast("string"), paymentLabels))
-      .withColumn("ratecode_label",
-        Funcs.labelMap(col("RatecodeID").cast("string"), ratecodeLabels))
+    df.withColumn("payment_label", Funcs.labelMap(col("payment_type"), paymentLabels))
+      .withColumn("ratecode_label", Funcs.labelMap(col("RatecodeID"), ratecodeLabels))
 
   /** Dedup on the composite natural key (reference `transform.py:171`).
     * pandas keep='first' is input-order-defined; distributed equivalent
-    * keeps the row with the smallest tiebreak for determinism. */
+    * keeps the row with the smallest tiebreak for determinism. Over
+    * fixed-width columns only, `dropDuplicates` is a codegen'd
+    * `HashAggregate` of `first()` buffers; a string column among them makes
+    * it an interpreted `SortAggregate` that sorts both sides of its
+    * exchange — so `transform` dedups before adding the string features. */
   def dedupTrips(df: DataFrame, tiebreak: Seq[String] = Nil): DataFrame =
     if (tiebreak.isEmpty)
       df.dropDuplicates(Seq("tpep_pickup_datetime", "tpep_dropoff_datetime"))
@@ -109,11 +122,15 @@ object TaxiPipeline {
     }
 
   /** Full transform stage (reference `transform.py:146-175`): metrics →
-    * anomaly split → time features → encoding → dedup. Returns (valid,
-    * anomalies); caller decides caching/sinks. */
+    * anomaly split → dedup → time features → encoding. The reference
+    * dedups last; dedup first keeps the same rows (the features are
+    * per-row functions, the pickup among them part of the dedup key) but
+    * keeps the dedup's buffers fixed-width and its exchange free of strings
+    * (see `dedupTrips`). Returns (valid, anomalies); caller decides
+    * caching/sinks. */
   def transform(extracted: DataFrame): (DataFrame, DataFrame) = {
     val tagged = tagAnomalies(calculateMetrics(extracted))
-    val valid = dedupTrips(encodeFeatures(addTimeFeatures(validTrips(tagged))))
+    val valid = encodeFeatures(addTimeFeatures(dedupTrips(validTrips(tagged))))
     (valid, anomalies(tagged))
   }
 

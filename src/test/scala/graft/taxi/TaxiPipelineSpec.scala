@@ -159,12 +159,103 @@ class TaxiPipelineSpec extends SparkSpec {
 
   test("star schema: payment-null rows silently drop from the fact (inner join)") {
     val (valid, _) = TaxiPipeline.transform(extracted)
-    val fact = TaxiWarehouse.factTrips(valid)
-    assert(fact.count() == 3) // 4 valid - 1 payment_label null
-    // FK integrity: every pk resolves
-    val dims = TaxiWarehouse.dimLocation(valid)
-    val badFk = fact.join(dims, fact("pickup_loc_pk") === dims("location_pk"), "left_anti")
-    assert(badFk.count() == 0)
-    assert(fact.schema("fare_amount").dataType.typeName == "decimal(8,2)")
+    val v = valid.cache()
+    try {
+      val fact = TaxiWarehouse.factTrips(v)
+      assert(fact.count() == 3) // 4 valid - 1 payment_label null
+      // FK integrity: every pk of all four dims resolves
+      assert(StarReference.danglingFks(fact, v) == 0)
+      assert(fact.schema("fare_amount").dataType.typeName == "decimal(8,2)")
+    } finally v.unpersist()
+  }
+
+  test("star schema: dims and fact equal the window + join-chain definitions") {
+    val (valid, _) = TaxiPipeline.transform(extracted)
+    val v = valid.cache()
+    try {
+      import StarReference.rows
+      assert(rows(TaxiWarehouse.dimTime(v)) == rows(StarReference.dimTime(v)))
+      assert(rows(TaxiWarehouse.dimLocation(v)) == rows(StarReference.dimLocation(v)))
+      assert(rows(TaxiWarehouse.dimPayment(v)) == rows(StarReference.dimPayment(v)))
+      assert(rows(TaxiWarehouse.factTrips(v)) == rows(StarReference.factTrips(v)))
+      assert(TaxiWarehouse.dimLocation(v).count() == 8) // 4 valid trips, 8 distinct ids
+    } finally v.unpersist()
+  }
+
+  private def planNodes(df: DataFrame): Seq[String] = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    plan.collect { case n => n.nodeName }
+  }
+
+  test("transform dedups with a codegen'd HashAggregate, not a SortAggregate") {
+    val (valid, _) = TaxiPipeline.transform(extracted)
+    val nodes = planNodes(valid)
+    assert(nodes.contains("HashAggregate"), nodes)
+    assert(!nodes.contains("SortAggregate"), nodes)
+  }
+
+  test("factTrips plan: no window, no pin, no exchange or join over the fact scan") {
+    val (valid, _) = TaxiPipeline.transform(extracted)
+    val v = valid.cache()
+    try {
+      val fact = TaxiWarehouse.factTrips(v)
+      val logical = fact.queryExecution.analyzed.collect { case n => n.nodeName }
+      assert(!logical.exists(n => n == "Window" || n == "LogicalRDD"), logical)
+      val physical = planNodes(fact)
+      assert(!physical.exists(n => n.contains("Exchange") || n.contains("Join")), physical)
+    } finally v.unpersist()
+  }
+
+  private def withConf[A](key: String, value: String)(body: => A): A = {
+    val prior = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try body finally spark.conf.set(key, prior)
+  }
+
+  test("ANSI mode: transform + factTrips give the same anomaly counts and fact rows") {
+    withConf("spark.sql.ansi.enabled", "true") {
+      val (valid, anoms) = TaxiPipeline.transform(TaxiPipeline.extract(fixture))
+      val counts = anoms.groupBy("rejection_reason").count()
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(counts == Map(
+        "Durée invalide" -> 2L,
+        "Distance hors limites" -> 1L,
+        "Montant de course invalide" -> 1L,
+        "Passagers invalides" -> 1L,
+        "Vitesse irréaliste" -> 1L))
+      val v = valid.cache()
+      try assert(TaxiWarehouse.factTrips(v).count() == 3) finally v.unpersist()
+      // an unparseable datetime still coerces to null and drops, not raises
+      val bad = fixture.limit(1).withColumn("tpep_pickup_datetime",
+        org.apache.spark.sql.functions.lit("not a date"))
+      assert(TaxiPipeline.extract(fixture.unionByName(bad)).count() == 11)
+    }
+  }
+
+  test("extract converts epoch-nanosecond Long timestamps (parquet timestamp[ns])") {
+    import org.apache.spark.sql.functions.{col, to_timestamp, unix_micros}
+    val dates = Seq("tpep_pickup_datetime", "tpep_dropoff_datetime")
+    val nanos = dates.foldLeft(fixture)((df, c) =>
+      df.withColumn(c, unix_micros(to_timestamp(col(c))) * 1000L))
+    assert(nanos.schema("tpep_pickup_datetime").dataType.typeName == "long")
+    val e = TaxiPipeline.extract(nanos)
+    assert(e.schema("tpep_pickup_datetime").dataType.typeName == "timestamp")
+    assert(StarReference.rows(e) == StarReference.rows(extracted))
+  }
+
+  test("encodeFeatures matches integral double codes by value, like pandas .map") {
+    import spark.implicits._
+    val codes = Seq[(java.lang.Double, java.lang.Double)](
+      (1.0, 2.0), (1.5, 4.0), (99.0, 5.0), (null, null)).toDF("RatecodeID", "payment_type")
+    for (ansi <- Seq("false", "true")) withConf("spark.sql.ansi.enabled", ansi) {
+      val got = TaxiPipeline.encodeFeatures(codes).select("ratecode_label", "payment_label")
+        .collect().map(r => (r.getString(0), r.getString(1))).toSeq
+      assert(got == Seq(("Standard", "Espèces"), (null, "Conflit"), (null, null), (null, null)),
+        s"ansi=$ansi")
+    }
   }
 }

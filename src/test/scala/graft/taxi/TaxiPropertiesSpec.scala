@@ -93,4 +93,23 @@ class TaxiPropertiesSpec extends SparkSpec {
       assert(r.anomalyRatePct >= 0.0 && r.anomalyRatePct <= 100.0)
     }
   }
+
+  test("random inputs: star schema equals the window + join-chain definitions") {
+    import StarReference.rows
+    for (seed <- 20L to 23L) {
+      val trips = draw(Gen.listOfN(120, tripGen), seed)
+      val (valid, _) = TaxiPipeline.transform(TaxiPipeline.extract(toDf(trips)))
+      val v = valid.cache()
+      try {
+        assert(rows(TaxiWarehouse.dimTime(v)) == rows(StarReference.dimTime(v)), s"seed $seed")
+        assert(rows(TaxiWarehouse.dimLocation(v)) == rows(StarReference.dimLocation(v)),
+          s"seed $seed")
+        assert(rows(TaxiWarehouse.dimPayment(v)) == rows(StarReference.dimPayment(v)),
+          s"seed $seed")
+        val fact = TaxiWarehouse.factTrips(v)
+        assert(rows(fact) == rows(StarReference.factTrips(v)), s"seed $seed")
+        assert(StarReference.danglingFks(fact, v) == 0, s"seed $seed")
+      } finally v.unpersist()
+    }
+  }
 }
